@@ -498,6 +498,7 @@ def polygon_join(
         )
 
     from rtree_cpp_spark.operators.cover import ref_point_cell_col
+    from rtree_cpp_spark.operators.spatial_join import hot_cells, salted_join
 
     pa, pb = prep(polys_a, "a_"), prep(polys_b, "b_")
     rx = F.greatest(F.col("a_min_x"), F.col("b_min_x"))
@@ -508,22 +509,18 @@ def polygon_join(
             if sample_fraction >= 1.0
             else prep(polys_a.sample(fraction=sample_fraction, seed=42), "a_")
         )
-        # persist: the hot set feeds both sides' broadcast joins and
-        # Spark does not reuse the exchange across them (see
-        # spatial_join_salted) — cache the O(hot cells) result so the
-        # census computes once.
-        census = (
-            census_src.groupBy("cell")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") > hot_threshold * sample_fraction)
-        ).persist()
+        hot = hot_cells(
+            census_src,
+            hot_threshold * sample_fraction,
+            F.lit(True).alias("_hot") if levels_finer is not None
+            else F.lit(n_salt).alias("_n_salt"),
+        )
         # Empty-census fast path (see spatial_join_salted): with no hot
         # cells both the salted and adaptive paths degenerate to the
         # plain cell join — rebuild the sides through the plain prep so
         # they also regain its fan_out/broadcast-shape treatment, and
-        # fall through to the unsalted branch.  Bounded planning probe
-        # on the already-persisted O(hot cells) census.
-        if census.isEmpty():
+        # fall through to the unsalted branch.
+        if hot is None:
             hot_threshold = None
             levels_finer = None
             pa, pb = prep(polys_a, "a_"), prep(polys_b, "b_")
@@ -533,32 +530,12 @@ def polygon_join(
             adaptive_rekey,
         )
 
-        hot = census.select("cell", F.lit(True).alias("_hot"))
         joined = adaptive_rekey(pa, "a_", grid, hot, levels_finer).join(
             adaptive_rekey(pb, "b_", grid, hot, levels_finer), "key"
         )
         keep = adaptive_keep_col(grid, levels_finer, rx, ry)
     elif hot_threshold is not None:
-        hot = census.select("cell", F.lit(n_salt).alias("_n_salt"))
-        sa = pa.join(F.broadcast(hot), "cell", "left").withColumn(
-            "salt",
-            F.when(F.col("_n_salt").isNull(), F.lit(0)).otherwise(
-                F.pmod(F.xxhash64("a_doc_id"), F.col("_n_salt")).cast("int")
-            ),
-        ).drop("_n_salt")
-        sb = (
-            pb.join(F.broadcast(hot), "cell", "left")
-            .withColumn(
-                "salt",
-                F.explode(
-                    F.when(F.col("_n_salt").isNull(), F.array(F.lit(0))).otherwise(
-                        F.sequence(F.lit(0), F.col("_n_salt") - 1)
-                    )
-                ),
-            )
-            .drop("_n_salt")
-        )
-        joined = sa.join(sb, ["cell", "salt"])
+        joined = salted_join(pa, pb, hot)
         keep = F.col("cell") == ref_point_cell_col(
             grid, F.col("a_min_x"), F.col("a_min_y"), F.col("b_min_x"), F.col("b_min_y")
         )

@@ -16,7 +16,8 @@ only in the cell of its reference point — no ``distinct`` shuffle
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
@@ -229,6 +230,52 @@ def spatial_join_adaptive(
     return joined.where(keep & hit).select(*out_cols)
 
 
+def hot_cells(census_src: DataFrame, threshold: float, tag: Column) -> DataFrame | None:
+    """The hot-cell census: cells of ``census_src`` holding more than
+    ``threshold`` rows, as a local frame ``(cell, tag)``, or None when
+    none is hot.  ONE collect feeds both sides' broadcasts (Spark does
+    not reuse the exchange across them) and leaves nothing cached;
+    pandas makes it an Arrow local relation, where a list would be an
+    RDD read through a Python worker at every broadcast."""
+    census = (
+        census_src.groupBy("cell")
+        .agg(F.count("*").alias("_n"))
+        .where(F.col("_n") > threshold)
+        .select("cell")
+    )
+    rows = census.collect()
+    if not rows:
+        return None
+    pdf = pd.DataFrame(rows, columns=census.columns)
+    return census_src.sparkSession.createDataFrame(pdf, census.schema).select("cell", tag)
+
+
+def salted_join(a: DataFrame, b: DataFrame, hot: DataFrame) -> DataFrame:
+    """Cell join re-sharded by the broadcast ``hot`` set (columns
+    ``cell, _n_salt``), shared by the rect and polygon salted joins: A
+    rows of a hot cell hash into one of its ``_n_salt`` buckets, B rows
+    fan out over all of them; every other row keeps salt 0."""
+    a = a.join(F.broadcast(hot), "cell", "left").withColumn(
+        "salt",
+        F.when(F.col("_n_salt").isNull(), F.lit(0)).otherwise(
+            F.pmod(F.xxhash64("a_doc_id"), F.col("_n_salt")).cast("int")
+        ),
+    ).drop("_n_salt")
+    b = (
+        b.join(F.broadcast(hot), "cell", "left")
+        .withColumn(
+            "salt",
+            F.explode(
+                F.when(F.col("_n_salt").isNull(), F.array(F.lit(0))).otherwise(
+                    F.sequence(F.lit(0), F.col("_n_salt") - 1)
+                )
+            ),
+        )
+        .drop("_n_salt")
+    )
+    return a.join(b, ["cell", "salt"])
+
+
 def adaptive_rekey(
     df: DataFrame, p: str, grid: Grid, hot: DataFrame, levels_finer: int
 ) -> DataFrame:
@@ -304,22 +351,14 @@ def _adaptive_candidates(
         if sample_fraction >= 1.0
         else _a_side(a_rects.sample(fraction=sample_fraction, seed=42), grid)
     )
-    # persist: both sides' rekeys broadcast this hot set and Spark does
-    # not reuse the exchange across them (see spatial_join_salted) —
-    # cache the O(hot cells) result so the census computes once.
-    hot = (
-        census_src.groupBy("cell")
-        .agg(F.count("*").alias("_n"))
-        .where(F.col("_n") > hot_threshold * sample_fraction)
-        .select("cell", F.lit(True).alias("_hot"))
-    ).persist()
+    hot = hot_cells(census_src, hot_threshold * sample_fraction, F.lit(True).alias("_hot"))
     # Empty-census fast path: nothing subdivides, so the mixed-key
     # rekey is the identity on the coarse key — join directly and skip
     # both sides' broadcast join + explode machinery.  Downstream,
     # adaptive_keep_col's coarse branch IS the plain reference-point
     # rule (no key ever reaches the fine offset), so output rows are
-    # unchanged.  Same bounded planning probe as spatial_join_salted.
-    if hot.isEmpty():
+    # unchanged.
+    if hot is None:
         return a.withColumnRenamed("cell", "key").join(
             _b_side(b_rects, grid).withColumnRenamed("cell", "key"), "key"
         )
@@ -356,43 +395,12 @@ def spatial_join_salted(
         if sample_fraction >= 1.0
         else _a_side(a_rects.sample(fraction=sample_fraction, seed=42), grid)
     )
-    scaled_threshold = hot_threshold * sample_fraction
-    # persist: the hot set feeds BOTH sides' broadcast joins and Spark
-    # does not reuse the exchange across them (measured: the census
-    # explode+agg executed twice, ~33% of the salted wall at sf0.1) —
-    # caching the O(hot cells) result makes it compute once.  Tiny by
-    # construction, so never unpersisted.
-    hot = (
-        census_src.groupBy("cell")
-        .agg(F.count("*").alias("_n"))
-        .where(F.col("_n") > scaled_threshold)
-        .select("cell", F.lit(n_salt).alias("_n_salt"))
-    ).persist()
+    hot = hot_cells(census_src, hot_threshold * sample_fraction, F.lit(n_salt).alias("_n_salt"))
     # Empty-census fast path: with no hot cells the salt column is the
     # constant 0 on both sides and the (cell, salt) join degenerates to
     # the plain cell join — skip both broadcast joins and the B-side
-    # fan-out entirely.  The emptiness probe is a bounded planning
-    # action on the already-persisted O(hot cells) census (same class
-    # as the layout medians), so on uniform data salting costs exactly
-    # one census pass over the (sampled) A cover and nothing else.
-    if hot.isEmpty():
+    # fan-out entirely, so on uniform data salting costs exactly one
+    # census pass over the (sampled) A cover and nothing else.
+    if hot is None:
         return _refine(a.join(b, "cell"), grid, keep_cell)
-    a = a.join(F.broadcast(hot), "cell", "left").withColumn(
-        "salt",
-        F.when(F.col("_n_salt").isNull(), F.lit(0)).otherwise(
-            F.pmod(F.xxhash64("a_doc_id"), F.col("_n_salt")).cast("int")
-        ),
-    ).drop("_n_salt")
-    b = (
-        b.join(F.broadcast(hot), "cell", "left")
-        .withColumn(
-            "salt",
-            F.explode(
-                F.when(F.col("_n_salt").isNull(), F.array(F.lit(0))).otherwise(
-                    F.sequence(F.lit(0), F.col("_n_salt") - 1)
-                )
-            ),
-        )
-        .drop("_n_salt")
-    )
-    return _refine(a.join(b, ["cell", "salt"]), grid, keep_cell)
+    return _refine(salted_join(a, b, hot), grid, keep_cell)

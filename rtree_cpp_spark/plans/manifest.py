@@ -21,6 +21,7 @@ import time
 import uuid
 from contextlib import contextmanager
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -48,17 +49,26 @@ MANIFEST_SCHEMA = (
 )
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """``FileSystem.exists`` on the path's own filesystem: no Spark job."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
 def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
-    try:
-        return spark.read.parquet(manifest_path)
-    except Exception:
+    """Empty only when the path does not exist (a fresh run); any other
+    read error raises, or the next run would silently redo every key."""
+    if not _exists(spark, manifest_path):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return spark.read.parquet(manifest_path)
 
 
 def done_keys(spark: SparkSession, manifest_path: str, run_id: str, stage: str) -> list[int]:
-    m = read_manifest(spark, manifest_path)
+    if not _exists(spark, manifest_path):
+        return []
     rows = (
-        m.where((F.col("run_id") == run_id) & (F.col("stage") == stage) & (F.col("status") == "done"))
+        spark.read.parquet(manifest_path)
+        .where((F.col("run_id") == run_id) & (F.col("stage") == stage) & (F.col("status") == "done"))
         .select("partition_key")
         .distinct()
         .collect()
@@ -67,7 +77,10 @@ def done_keys(spark: SparkSession, manifest_path: str, run_id: str, stage: str) 
 
 
 def append_manifest(spark: SparkSession, manifest_path: str, rows: list[tuple]) -> None:
-    spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(manifest_path)
+    """Append one batch as ONE parquet file, built from pandas (an Arrow
+    local relation; a list would round-trip through a Python worker)."""
+    pdf = pd.DataFrame(rows, columns=[c.split()[0] for c in MANIFEST_SCHEMA.split(", ")])
+    spark.createDataFrame(pdf, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(manifest_path)
 
 
 def resumable_write(
@@ -90,6 +103,12 @@ def resumable_write(
 
     Returns {written_keys, skipped_keys, output_rows}.
 
+    A ``rebalance`` hint on ``key_col`` below the persist clusters the
+    output: each key is written by one task, so a batch writes one file
+    per key plus one manifest file (AQE may still split an oversized key).
+    A missing manifest path means a fresh run, answered without a Spark
+    job; any other manifest read error aborts the write.
+
     The upstream plan executes exactly ONCE: ``df`` is persisted and
     materialized by a single per-key count aggregation (which also yields
     the key list and all manifest row counts), so every batch write is a
@@ -100,7 +119,7 @@ def resumable_write(
     by the coarse grid (≤ 4^coarse_level ≤ 4096), never data rows.
     """
     spark = df.sparkSession
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df = df.hint("rebalance", key_col).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         counts = {r[0]: r[1] for r in df.groupBy(key_col).count().collect()}
         all_keys = sorted(counts)

@@ -74,6 +74,52 @@ def test_upstream_executes_once(spark, tmp_path):
     assert acc.value == n
 
 
+def test_one_file_per_key_and_manifest_file_per_batch(spark, tmp_path):
+    """The write is clustered by key: 64 keys spread over 200 upstream
+    partitions yield one data file per key and one manifest file per
+    batch, not one per (upstream partition, key)."""
+    import os
+
+    base = spark.range(0, 6400, numPartitions=200).select(
+        (F.col("id") % 64).alias("cell"), F.col("id").alias("doc_id")
+    )
+    out = str(tmp_path / "out")
+    man = str(tmp_path / "manifest")
+    res = manifest.resumable_write(base, out, "cell", man, "run5", "t", keys_per_batch=16)
+    assert res["output_rows"] == 6400 and len(res["written_keys"]) == 64
+
+    def parts(d):
+        return [f for f in os.listdir(d) if f.startswith("part-")]
+
+    key_dirs = [d for d in os.listdir(out) if d.startswith("cell=")]
+    assert len(key_dirs) == 64
+    assert all(len(parts(os.path.join(out, d))) == 1 for d in key_dirs)
+    assert len(parts(man)) == 4  # 64 keys / 16 per batch
+
+
+def test_corrupt_manifest_raises(spark, tiles_df, tmp_path):
+    """An unreadable manifest aborts the write instead of reading as
+    empty (which would silently redo every key); only a missing
+    manifest path means a fresh run."""
+    import os
+
+    out = str(tmp_path / "out")
+    man = str(tmp_path / "manifest")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        manifest.resumable_write(
+            tiles_df, out, "cell", man, "run6", "tiles", keys_per_batch=8, fail_after_batches=1
+        )
+    for f in os.listdir(man):
+        if f.startswith("part-"):
+            with open(os.path.join(man, f), "wb") as fh:
+                fh.write(b"not a parquet file")
+        elif f.endswith(".crc"):
+            os.remove(os.path.join(man, f))
+    with pytest.raises(Exception) as exc:
+        manifest.resumable_write(tiles_df, out, "cell", man, "run6", "tiles", keys_per_batch=8)
+    assert "injected failure" not in str(exc.value)
+
+
 def test_rerun_is_noop(spark, tiles_df, tmp_path):
     out = str(tmp_path / "out")
     man = str(tmp_path / "manifest")

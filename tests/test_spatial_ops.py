@@ -71,9 +71,12 @@ def test_salted_join_equals_unsalted(spark, rects_a_df, rects_b_df, rects_a_pdf,
     # skewed fixture: 30% of docs are clustered in 3 hot spots, so a low
     # threshold actually triggers salting here
     grid = Grid(6)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     salted = spatial_join_salted(rects_a_df, rects_b_df, grid, hot_threshold=5, n_salt=4)
     exp = brute.join_brute(rects_a_pdf, rects_b_pdf)
     assert_same_rows(salted, exp)
+    # the hot-cell census is collected, not cached: nothing is left behind
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 @pytest.mark.parametrize("grid", GRIDS, ids=lambda g: f"level{g.level}")
