@@ -31,7 +31,7 @@ from rtree_cpp_spark.operators import (
     similarity,
     text_analysis,
 )
-from rtree_cpp_spark.operators.knn import idw_interpolate, knn, knn_join, knn_kernel
+from rtree_cpp_spark.operators.knn import idw_interpolate, knn, knn_join
 from rtree_cpp_spark.operators.pip_join import (
     octagons_from_rects,
     pip_join,
@@ -180,11 +180,9 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             hot_threshold=2000, levels_finer=2, sample_fraction=0.25,
         ),
         "spatial_knn": lambda s, d: knn(rects.rects_a(s, d), rects.queries_knn(s, d), GRID),
-        "spatial_knn_kernel": lambda s, d: knn_kernel(rects.rects_a(s, d), rects.queries_knn(s, d), GRID),
         "spatial_knn_join": lambda s, d: knn_join(
             rects.rects_a_subset(s, d), rects.rects_b(s, d), GRID, k=5
         ),
-        "spatial_knn_join_sharded": lambda s, d: _knn_join_sharded(s, d),
         "spatial_knn_join_frontier": lambda s, d: _knn_join_frontier(s, d),
         "spatial_contains": lambda s, d: contains_query(
             rects.rects_a(s, d), rects.queries_range(s, d), GRID
@@ -198,27 +196,17 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spatial_pip": lambda s, d: pip_join(_knn_points(s, d), rects.rects_a(s, d), GRID, "closed"),
         "spatial_pip_strict": lambda s, d: pip_join(_knn_points(s, d), rects.rects_a(s, d), GRID, "open"),
         # validate=False: octagons_from_rects rings are plan-computed
-        # with statically valid arity; the Arrow kernels still assert
-        # ring arity from the list offsets (operators/pip_join.py)
+        # with statically valid arity (operators/pip_join.py)
         "spatial_pip_polygon": lambda s, d: polygon_pip_join(
             _knn_points(s, d), octagons_from_rects(rects.rects_a(s, d)), GRID,
             validate=False,
         ),
-        # the Arrow-kernel refine is the declared scale path
-        # (BENCH/polygon_scale.json) — gated as its own mode so BOTH fold
-        # implementations are value-verified by the driver
-        "spatial_pip_polygon_kernel": lambda s, d: polygon_pip_join(
-            _knn_points(s, d), octagons_from_rects(rects.rects_a(s, d)), GRID,
-            refine="kernel", validate=False,
-        ),
-        # kernel refine = the scale path (BENCH/polygon_scale.json: 2.1x
-        # the expr form at 10^6 rows); expr is value-identical
-        # (pytest + the scale script's identity gate)
+        # the SAT kernel still asserts ring arity from the Arrow list
+        # offsets with validate=False
         "spatial_join_octagon": lambda s, d: polygon_join(
             octagons_from_rects(rects.rects_a(s, d)),
             octagons_from_rects(rects.rects_b(s, d)),
             GRID,
-            refine="kernel",
             validate=False,
         ),
         # polygon join with mixed-resolution adaptive cells — hot coarse
@@ -229,7 +217,6 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             octagons_from_rects(rects.rects_a(s, d)),
             octagons_from_rects(rects.rects_b(s, d)),
             GRID,
-            refine="kernel",
             validate=False,
             hot_threshold=2000,
             levels_finer=2,
@@ -448,21 +435,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_funnel": f["events_funnel"],
         "agg_pricing_summary": f["agg_pricing_summary"],
         "agg_top_orders": f["agg_top_orders"],
-        "spatial_knn": _merged(f, "spatial_knn", "spatial_knn_kernel", "variant", "window", "kernel"),
-        # three execution regimes, one rule: batched (driver-resident
-        # query batch), sharded (bounded per-shard batches), frontier
-        # (fully distributed — the 10^12-doc path, no driver residency)
+        "spatial_knn": f["spatial_knn"],
+        # two execution regimes, one rule: batched (driver-resident
+        # query batch) and frontier (fully distributed — the
+        # 10^12-doc path, no driver residency)
         "spatial_knn_join": _tagged_union(
             f,
             [
                 ("spatial_knn_join", "batched"),
-                ("spatial_knn_join_sharded", "sharded"),
                 ("spatial_knn_join_frontier", "frontier"),
             ],
         ),
-        # all three join strategies value-gated through one row: plain
-        # (AQE-only skew defense), salted (explicit census salting), and
-        # bucketed (zero-exchange SMJ over cover-bucketed tables)
+        # every rect join strategy value-gated through one row: plain
+        # (AQE-only skew defense), salted (explicit census salting),
+        # adaptive (finer hot cells), and bucketed (zero-exchange SMJ
+        # over cover-bucketed tables); plus the octagon SAT join, plain
+        # and adaptive
         "spatial_join": _tagged_union(
             f,
             [
@@ -477,8 +465,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spatial_pip": _tagged_union(
             f,
             [("spatial_pip", "closed"), ("spatial_pip_strict", "open"),
-             ("spatial_pip_polygon", "polygon"),
-             ("spatial_pip_polygon_kernel", "polygon_kernel")],
+             ("spatial_pip_polygon", "polygon")],
             tagcol="mode",
         ),
         "tiles_assign": _tagged_union(
@@ -587,17 +574,6 @@ def _interleaved_join_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pairs.join(sig_a, "a_doc_id").join(sig_b, "b_doc_id").select(
         "a_doc_id", "b_doc_id", "a_sig", "b_sig"
-    )
-
-
-def _knn_join_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics (and oracle) as spatial_knn_join, executed through
-    the A-sharded driver loop — proves sharding is result-invariant at
-    gate scale too."""
-    from rtree_cpp_spark.operators.knn import knn_join_sharded
-
-    return knn_join_sharded(
-        rects.rects_a_subset(spark, sf_dir), rects.rects_b(spark, sf_dir), GRID, k=5, n_shards=3
     )
 
 
@@ -816,6 +792,21 @@ _SQDIST = (
 
 _H64_DUCK = "CAST(('0x' || substr(md5({s}), 1, 15)) AS BIGINT)"
 
+
+def _shingle_ctes(src: str) -> str:
+    """``toks`` + ``sh(doc_id, shingle)``: the distinct word n-gram
+    shingles of ``src(doc_id, text)``, n = dedup.SHINGLE_N (docs with
+    fewer tokens have none) — the construction of operators/dedup.py."""
+    n = dedup.SHINGLE_N
+    gram = " || ' ' || ".join(["t[i]"] + [f"t[i+{j}]" for j in range(1, n)])
+    return (
+        f"toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM {src} "
+        f"WHERE len(string_split(text, ' ')) >= {n}), "
+        f"sh AS (SELECT DISTINCT doc_id, {gram} AS shingle "
+        f"FROM (SELECT doc_id, t, unnest(generate_series(1, len(t)-{n - 1})) AS i FROM toks))"
+    )
+
+
 _DOT_DUCK = (
     "list_reduce(list_transform(list_zip({a}, {b}), "
     "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (acc, v) -> acc + v)"
@@ -896,10 +887,7 @@ def oracle_sql() -> dict[str, str]:
         """MinHash-LSH candidate pairs as a CTE chain over any source
         relation ``src(doc_id, text)`` — ends with ``pairs``."""
         return (
-            f"toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM {src} "
-            "WHERE len(string_split(text, ' ')) >= 3), "
-            "sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle "
-            "FROM (SELECT doc_id, t, unnest(generate_series(1, len(t)-2)) AS i FROM toks)), "
+            _shingle_ctes(src) + ", "
             "h AS (SELECT doc_id, "
             + _H64_DUCK.format(s="shingle")
             + f" % {mh_p} AS hm FROM sh), "
@@ -1157,12 +1145,9 @@ def oracle_sql() -> dict[str, str]:
     )
     # cross-document duplicated-shingle stats (operators/dedup.py
     # shingle_dup_stats): distinct postings → min!=max cross-doc test →
-    # per-doc counts; same 3-gram construction as the MinHash CTEs
+    # per-doc counts; same shingle CTEs as the MinHash oracle
     shingle_dup_sql = (
-        "WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents "
-        "WHERE len(string_split(text, ' ')) >= 3), "
-        "sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle "
-        "FROM (SELECT doc_id, t, unnest(generate_series(1, len(t)-2)) AS i FROM toks)), "
+        "WITH " + _shingle_ctes("documents") + ", "
         "cross_dup AS (SELECT shingle, MIN(doc_id) <> MAX(doc_id) AS is_dup "
         "FROM sh GROUP BY shingle), "
         "per_doc AS (SELECT s.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles, "
@@ -1377,11 +1362,10 @@ def oracle_sql() -> dict[str, str]:
              (join_sql, "bucketed"), (octagon_join_sql, "octagon"),
              (octagon_join_sql, "octagon_adaptive")]
         ),
-        "spatial_knn": _tag2(knn_sql, "window", knn_sql, "kernel"),
+        "spatial_knn": knn_sql,
         "spatial_knn_join": _tagn(
             [
                 (knn_join_sql, "batched"),
-                (knn_join_sql, "sharded"),
                 (knn_join_sql, "frontier"),
             ]
         ),
@@ -1409,7 +1393,6 @@ def oracle_sql() -> dict[str, str]:
                 (pip_sql_tpl.format(gt=">=", lt="<="), "closed"),
                 (pip_sql_tpl.format(gt=">", lt="<"), "open"),
                 (pip_polygon_sql, "polygon"),
-                (pip_polygon_sql, "polygon_kernel"),
             ],
             tagcol="mode",
         ),

@@ -134,7 +134,6 @@ def main() -> None:
         "spatial_join_octagon_adaptive",
         "spatial_range",
         "spatial_knn",
-        "spatial_knn_kernel",
         "spatial_knn_join",
         "spatial_knn_join_frontier",
         "spatial_contains",

@@ -10,9 +10,11 @@ Output: (a_doc_id, b_doc_id) partitioned by the reference-point coarse
 cell (`part`) with per-partition lineage rows in the manifest; re-running
 with the same --run-id skips completed partitions.
 
-``--geometry octagon`` runs the convex-polygon SAT join (Arrow-kernel
-refine + the same census salting) on corner-cut octagons derived from
-the doc rects, with the same reference-cell output partitioning.
+``--geometry octagon`` runs the convex-polygon SAT join on corner-cut
+octagons derived from the doc rects: the same hot-cell census, but hot
+cells subdivide into adaptive finer cells instead of salting
+(``--n-salt`` applies to the rect join only), with the same
+reference-cell output partitioning.
 """
 
 from __future__ import annotations
@@ -49,8 +51,7 @@ def main() -> None:
 
         pairs = polygon_join(
             octagons_from_rects(a), octagons_from_rects(b), grid,
-            refine="kernel", hot_threshold=args.hot_threshold,
-            n_salt=args.n_salt, keep_cell=True,
+            hot_threshold=args.hot_threshold, keep_cell=True,
         )
     else:
         pairs = spatial_join_salted(

@@ -7,12 +7,11 @@ composed with the K1 kernel, RTreeBulkLoad.cpp:238-302).
         --regime frontier \
         --output /data/out/knn_join --manifest /data/out/manifest
 
-``--regime`` picks the execution shape (results identical across all
-three — gate- and pytest-verified; BENCH/knn_scale.json measures them):
+``--regime`` picks the execution shape (results identical across both
+— gate- and pytest-verified; BENCH/knn_scale.json measures them):
 
 - ``batched``   the whole A batch driver-resident (reference-style
                 query-file contract; |A| up to ~10^5),
-- ``sharded``   bounded per-shard driver batches (``--n-shards``),
 - ``frontier``  the frontier stays a DataFrame — no driver residency,
                 the 10^12-doc default.
 
@@ -31,18 +30,15 @@ from jobs._common import base_parser, build_session, coarse_cell_col, finish, lo
 from pyspark.sql import functions as F
 
 from rtree_cpp_spark.functions.cells import Grid
-from rtree_cpp_spark.operators.knn import knn_join, knn_join_frontier, knn_join_sharded
+from rtree_cpp_spark.operators.knn import knn_join, knn_join_frontier
 
 
 def main() -> None:
-    p = base_parser("kNN join (A centroids vs B rects, three execution regimes)")
+    p = base_parser("kNN join (A centroids vs B rects, two execution regimes)")
     p.add_argument("--input-a", required=True, help="query-side rect table")
     p.add_argument("--input-b", required=True, help="data-side rect table")
     p.add_argument("--k", type=int, default=5)
-    p.add_argument("--regime", choices=["batched", "sharded", "frontier"],
-                   default="frontier")
-    p.add_argument("--n-shards", type=int, default=8,
-                   help="sharded regime only: bounds the per-shard driver batch")
+    p.add_argument("--regime", choices=["batched", "frontier"], default="frontier")
     args = p.parse_args()
     if args.k <= 0:
         p.error("k must be > 0")  # mirrors src/Main.cpp:212-215
@@ -53,8 +49,6 @@ def main() -> None:
     b = load_rects(spark, args.input_b, args.format)
     if args.regime == "batched":
         result = knn_join(a, b, grid, k=args.k)
-    elif args.regime == "sharded":
-        result = knn_join_sharded(a, b, grid, k=args.k, n_shards=args.n_shards)
     else:
         result = knn_join_frontier(a, b, grid, k=args.k)
     qcell = a.select(

@@ -27,6 +27,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 N_HASHES = 32
+# word n-gram width of every shingle here (MinHash and shingle_dup_stats);
+# the DuckDB oracles in __spark_entry__.py build their shingles from it too
+SHINGLE_N = 3
 N_BANDS = 8
 ROWS_PER_BAND = 4
 
@@ -64,7 +67,7 @@ def _tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def _shingles(tokens: Column, n: int = 3) -> Column:
+def _shingles(tokens: Column, n: int = SHINGLE_N) -> Column:
     """Word n-grams (only for docs with >= n tokens; callers filter)."""
     return F.transform(
         F.sequence(F.lit(1), F.size(tokens) - (n - 1)),
@@ -87,7 +90,7 @@ def _minhash_wide(docs: DataFrame, n_hashes: int) -> DataFrame:
     # No distinct-shingle pass: MIN is idempotent under duplicates, so
     # min over the shingle multiset == min over the set (what the
     # oracle's DISTINCT computes) — saves a full shuffle.
-    shingled = docs.where(F.size(toks) >= 3).select(
+    shingled = docs.where(F.size(toks) >= SHINGLE_N).select(
         "doc_id", F.explode(_shingles(toks)).alias("shingle")
     )
     hm = (_h64(F.col("shingle")) % MINHASH_P).alias("hm")
@@ -228,7 +231,7 @@ def duplicate_components(
     return labels
 
 
-def shingle_dup_stats(docs: DataFrame, n: int = 3) -> DataFrame:
+def shingle_dup_stats(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_id, n_shingles, n_dup_shingles, dup_fraction): per-document
     CROSS-DOCUMENT duplicated-span statistic — for each doc, how many of
     its distinct word n-gram shingles also occur in at least one OTHER

@@ -38,31 +38,6 @@ from rtree_cpp_spark.operators.cover import with_cover_cells
 KNN_SCHEMA = "query_id string, doc_id string, sq_dist double, rank int"
 
 
-def _topk_kernel(pdf):
-    """Per-query distance-bounded top-k selection (applyInPandas kernel,
-    north_star: "distance-bounded priority queue in applyInPandas").
-
-    Vectorized equivalent of the reference's size-k max-heap
-    (RTreeBulkLoad.cpp:278-295) with the documented deterministic
-    tie-break (sq_dist, doc_id) — a lexicographic partial sort keeps
-    exactly the k best candidates and discards the rest, bounding
-    per-query memory to the candidate set of the gathered disk."""
-    import pandas as pd  # local: executors import lazily
-
-    k = int(pdf["k"].iat[0])
-    d = pdf["sq_dist"].to_numpy()
-    ids = pdf["doc_id"].to_numpy()
-    order = np.lexsort((ids, d))[:k]
-    return pd.DataFrame(
-        {
-            "query_id": pdf["query_id"].iat[0],
-            "doc_id": ids[order],
-            "sq_dist": d[order],
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-        }
-    )
-
-
 def _disk_cells_df(qdf: DataFrame, grid: Grid) -> DataFrame:
     """Explode (query_id, x, y, k, qcx, qcy, rho) to its disk cells."""
     n = grid.n
@@ -83,22 +58,15 @@ def knn(
     queries: DataFrame,
     grid: Grid,
     initial_radius: int = 1,
-    ranker: str = "window",
 ) -> DataFrame:
     """data_rects(doc_id, min_x..max_y) x queries(query_id, x, y, k)
     → (query_id, doc_id, sq_dist, rank), exact, rank 1..k ascending.
 
     The query batch (like the reference's query file, src/Main.cpp:216)
-    is driver-resident; the DATA side is never collected.
-
-    ``ranker`` picks the per-query top-k strategy — identical results:
-    - ``'window'``: JVM ``row_number`` over (sq_dist, doc_id) — whole
-      pipeline stays in codegen;
-    - ``'kernel'``: ``applyInPandas`` bounded priority-queue kernel
-      (north_star's stated shape) — one Arrow batch per query group.
+    is driver-resident; the DATA side is never collected.  The per-query
+    top-k is a JVM ``row_number`` over (sq_dist, doc_id), so the whole
+    round stays in codegen.
     """
-    if ranker not in ("window", "kernel"):
-        raise ValueError(f"ranker must be 'window' or 'kernel', got {ranker!r}")
     import pandas as pd
 
     spark = data_rects.sparkSession
@@ -133,19 +101,12 @@ def knn(
                     F.col("max_x").cast("double"), F.col("max_y").cast("double"),
                 ),
             )
-            if ranker == "window":
-                w = Window.partitionBy("query_id").orderBy("sq_dist", "doc_id")
-                ranked = (
-                    scored.withColumn("rank", F.row_number().over(w))
-                    .where(F.col("rank") <= F.col("k"))
-                    .select("query_id", "doc_id", "sq_dist", "rank")
-                )
-            else:
-                ranked = (
-                    scored.select("query_id", "doc_id", "sq_dist", "k")
-                    .groupBy("query_id")
-                    .applyInPandas(_topk_kernel, KNN_SCHEMA)
-                )
+            w = Window.partitionBy("query_id").orderBy("sq_dist", "doc_id")
+            ranked = (
+                scored.withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= F.col("k"))
+                .select("query_id", "doc_id", "sq_dist", "rank")
+            )
             # ONE action per round: the ranked top-k is small, and both
             # the stop-rule stats and the finished results come from it.
             rank_pdf = ranked.toPandas()
@@ -181,21 +142,12 @@ def knn(
         d.unpersist(blocking=False)
 
 
-def knn_kernel(
-    data_rects: DataFrame, queries: DataFrame, grid: Grid, initial_radius: int = 1
-) -> DataFrame:
-    """kNN with the applyInPandas bounded-priority-queue ranker
-    (north_star shape); results identical to :func:`knn`."""
-    return knn(data_rects, queries, grid, initial_radius, ranker="kernel")
-
-
 def knn_join(
     a_rects: DataFrame,
     b_rects: DataFrame,
     grid: Grid,
     k: int,
     initial_radius: int = 1,
-    ranker: str = "window",
 ) -> DataFrame:
     """kNN JOIN: for each A doc, its k nearest B docs by squared
     centroid→rect distance → (query_id=a_doc_id, doc_id=b_doc_id,
@@ -206,47 +158,14 @@ def knn_join(
     kernel — A plays the query file, B the dataset.  The A batch is
     collected to the driver like any query batch; suitable for the
     reference-style regimes (|A| up to ~10^5 driver-resident queries);
-    beyond that, shard A and run batches through the same kernel."""
+    beyond that, :func:`knn_join_frontier` keeps the queries distributed."""
     centroids = a_rects.select(
         F.col("doc_id").alias("query_id"),
         ((F.col("min_x") + F.col("max_x")) / F.lit(2.0)).alias("x"),
         ((F.col("min_y") + F.col("max_y")) / F.lit(2.0)).alias("y"),
         F.lit(k).alias("k"),
     )
-    return knn(b_rects, centroids, grid, initial_radius, ranker)
-
-
-def knn_join_sharded(
-    a_rects: DataFrame,
-    b_rects: DataFrame,
-    grid: Grid,
-    k: int,
-    n_shards: int = 4,
-    initial_radius: int = 1,
-    ranker: str = "window",
-) -> DataFrame:
-    """kNN join for A sets too large for one driver-resident query batch:
-    deterministic hash-sharding of A (pmod(xxhash64(doc_id), n_shards)),
-    each shard through the same disk-doubling kernel, results unioned.
-
-    kNN join is embarrassingly parallel in A — shards never interact —
-    so sharding changes scheduling only, never results (pytest asserts
-    shard-count invariance).  The per-shard driver residency is the same
-    contract as the reference's query file; n_shards bounds it."""
-    if n_shards <= 0:
-        raise ValueError(f"n_shards must be positive, got {n_shards}")
-    # materialize A once: the shard filter evaluates the plan once per
-    # shard, and a nondeterministic source (sample/unordered limit)
-    # would otherwise break the shards-partition-A invariant
-    a_rects = a_rects.localCheckpoint()
-    shard = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_shards))
-    out = None
-    for s in range(n_shards):
-        part = knn_join(
-            a_rects.where(shard == s), b_rects, grid, k, initial_radius, ranker
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+    return knn(b_rects, centroids, grid, initial_radius)
 
 
 def knn_join_frontier(
@@ -257,13 +176,11 @@ def knn_join_frontier(
     initial_radius: int = 1,
 ) -> DataFrame:
     """kNN join with the query FRONTIER kept distributed — the 100 TB
-    path past both driver residency and the sequential shard loop.
+    path past driver residency.
 
-    :func:`knn` (and the per-shard loop of :func:`knn_join_sharded`)
-    holds the query batch in driver pandas, so wall grows linearly in
-    n_shards: shard i's disk-doubling rounds finish before shard i+1
-    starts, even on an idle cluster.  Here ALL queries advance through
-    the SAME O(log grid) rounds as one DataFrame:
+    :func:`knn` holds the query batch in driver pandas.  Here ALL
+    queries advance through the SAME O(log grid) rounds as one
+    DataFrame:
 
         round(ρ): open frontier explodes to its disk cells (JVM
                   ``sequence``) → ONE join against the cover-exploded

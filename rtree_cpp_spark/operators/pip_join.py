@@ -14,9 +14,9 @@ Plan: each point lives in exactly ONE grid cell; rects cover-explode to
 their cells; candidates meet by cell equi-join and the exact predicate
 refines.  Because the point's cell is unique, every true (point, rect)
 pair meets in exactly one cell — **no dedup pass at all** (cheaper than
-the rect-rect join's reference-point filter).  At 10^12 docs the join is
-a salted SMJ on ``cell`` with the same hot-cell defenses as the spatial
-join; a small point set broadcasts instead.
+the rect-rect join's reference-point filter).  A small side broadcasts;
+otherwise the cell equi-join is a sort-merge join with AQE's skew-join
+split as the only hot-cell defense (PIP has no census or salting).
 """
 
 from __future__ import annotations
@@ -48,14 +48,12 @@ def _with_ring_check(df: DataFrame, xs: str = "xs", ys: str = "ys") -> DataFrame
     return df.where(F.coalesce(F.assert_true(ok, msg), F.lit(True)))
 
 
-def _id_schema(df: DataFrame, pairs: list[tuple[str, str]], extra: str = "") -> str:
+def _id_schema(df: DataFrame, cols: list[str], extra: str = "") -> str:
     """mapInArrow output schema with id column TYPES taken from the
-    input plan (not hardcoded strings), so refine='kernel' accepts
-    exactly the same inputs as refine='expr' — non-string doc ids
-    included.  ``pairs`` maps (input_col, output_col)."""
+    input plan (not hardcoded strings), so the SAT kernel accepts any
+    doc id type the input carries — non-string ids included."""
     by_name = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    cols = ", ".join(f"{out} {by_name[src]}" for src, out in pairs)
-    return cols + extra
+    return ", ".join(f"{c} {by_name[c]}" for c in cols) + extra
 
 
 def pip_join(
@@ -122,7 +120,6 @@ def polygon_pip_join(
     polygons: DataFrame,
     grid: Grid,
     id_col: str = "doc_id",
-    refine: str = "expr",
     validate: bool = True,
 ) -> DataFrame:
     """TRUE point-in-polygon join (north_star: "point-in-polygon joins")
@@ -137,32 +134,19 @@ def polygon_pip_join(
     Plan (identical scale shape to pip_join):
       1. candidate generation — polygons cover-explode on their BBOX to
          grid cells; each point hashes to its ONE cell; candidates meet
-         by cell equi-join (salted SMJ at scale, exactly-once with no
-         dedup because the point cell is unique);
+         by cell equi-join (exactly-once with no dedup because the
+         point cell is unique);
       2. exact refine — every edge's cross product
          ``(x_j-x_i)*(py-y_i) - (y_j-y_i)*(px-x_i) >= 0`` must hold for
-         a CCW convex ring, gated behind a codegen-cheap bbox test.
+         a CCW convex ring, gated behind a codegen-cheap bbox test.  The
+         fold is an ``F.aggregate`` over the vertex arrays in the JVM:
+         no Python worker (an Arrow-kernel twin measured no faster,
+         scripts/polygon_scale_run.py).
 
-    ``refine`` picks the fold implementation (results IDENTICAL, the
-    per-edge IEEE expression is the same — pytest-asserted):
-
-    - ``'expr'`` (default): ``F.aggregate`` over the vertex arrays —
-      zero Python, but Spark interprets higher-order functions per
-      row, so the fold costs ~µs per bbox-surviving candidate;
-    - ``'kernel'``: Arrow-native numpy (``mapInArrow``) — vectorizes
-      the cross products across the whole candidate batch, gathering
-      ragged vertex lists straight from the Arrow list buffers (no
-      pandas object materialization); the scale path when bbox
-      survivors are a large share of candidates.  Output id types are
-      derived from the input plan, so both refine modes accept the
-      same inputs.
-
-    Precondition (both modes, checked in-plan): every ring has >= 3
-    vertices and ``len(xs) == len(ys)`` — degenerate rings fail fast
-    with a clear error instead of evaluating nonsense edges.
+    Precondition (checked in-plan when ``validate``): every ring has
+    >= 3 vertices and ``len(xs) == len(ys)`` — degenerate rings fail
+    fast with a clear error instead of evaluating nonsense edges.
     """
-    if refine not in ("expr", "kernel"):
-        raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
     cols = polygons.columns
     if not {"min_x", "min_y", "max_x", "max_y"}.issubset(cols):
         polygons = polygons.select(
@@ -174,7 +158,7 @@ def polygon_pip_join(
     # that consumes ring payloads); see polygon_join's docstring for
     # the validate tradeoff on plan-computed rings
     vg = _with_ring_check(polygons) if validate else polygons
-    # fan_out: PIP refine (expr fold or Arrow kernel) runs pre-shuffle
+    # fan_out: the PIP refine fold runs pre-shuffle
     # on a broadcast-join pipeline — don't inherit a 1-split scan.
     # SLIM: the cell join carries the polygon id + bbox only; ring
     # payloads are re-attached by id for bbox survivors
@@ -215,16 +199,7 @@ def polygon_pip_join(
         .select("point_id", "x", "y", id_col)
         .join(vg.select(id_col, "xs", "ys"), id_col)
     )
-    if refine == "expr":
-        return cand.where(inside).select("point_id", id_col)
-    out = cand.select(
-        "point_id", "x", "y", F.col(id_col).alias("_id"), "xs", "ys"
-    )
-    out = out.mapInArrow(
-        _pip_kernel,
-        schema=_id_schema(out, [("point_id", "point_id"), ("_id", "_id")]),
-    )
-    return out.select("point_id", F.col("_id").alias(id_col))
+    return cand.where(inside).select("point_id", id_col)
 
 
 def _ragged(col):
@@ -244,8 +219,9 @@ def _ragged(col):
 def _check_lens(lens_x, lens_y):
     """Ring-arity guard from the Arrow list offsets (already in hand —
     zero extra cost): every ring needs >= 3 vertices and equal-length
-    coordinate arrays.  Runs in BOTH kernels regardless of ``validate``
-    so degenerate rings can never produce silent wrong answers."""
+    coordinate arrays.  Runs in the SAT kernel regardless of
+    ``validate`` so degenerate rings can never produce silent wrong
+    answers."""
     import numpy as np
 
     if lens_x.size and (lens_x.min() < 3 or not np.array_equal(lens_x, lens_y)):
@@ -264,44 +240,6 @@ def _gather(starts, n, flat):
     return flat[starts[:, None] + np.arange(n)[None, :]]
 
 
-def _pip_kernel(batches):
-    """Arrow-native PIP refine (``mapInArrow``): vectorized all-edges
-    cross products over candidate rows (point_id, x, y, _id, xs, ys)
-    → survivors.  Vertex lists are gathered straight from the Arrow
-    list buffers (offsets + flat float64), grouped per distinct vertex
-    count.  Same IEEE expression per edge as the expr variant —
-    results identical."""
-    import numpy as np
-    import pyarrow as pa
-
-    out_names = ["point_id", "_id"]
-    for batch in batches:
-        col = {n: batch.column(i) for i, n in enumerate(batch.schema.names)}
-        if batch.num_rows == 0:
-            yield pa.RecordBatch.from_arrays(
-                [col[n] for n in out_names], names=out_names)
-            continue
-        px = col["x"].to_numpy(zero_copy_only=False)
-        py = col["y"].to_numpy(zero_copy_only=False)
-        lens, starts_x, fx = _ragged(col["xs"])
-        lens_y, starts_y, fy = _ragged(col["ys"])
-        _check_lens(lens, lens_y)
-        keep = np.zeros(batch.num_rows, dtype=bool)
-        for n in np.unique(lens):
-            idx = np.nonzero(lens == n)[0]
-            vx = _gather(starts_x[idx], int(n), fx)
-            vy = _gather(starts_y[idx], int(n), fy)
-            vxj, vyj = np.roll(vx, -1, axis=1), np.roll(vy, -1, axis=1)
-            cross = (
-                (vxj - vx) * (py[idx, None] - vy)
-                - (vyj - vy) * (px[idx, None] - vx)
-            )
-            keep[idx] = (cross >= 0.0).all(axis=1)
-        mask = pa.array(keep)
-        yield pa.RecordBatch.from_arrays(
-            [col[n].filter(mask) for n in out_names], names=out_names)
-
-
 def _sat_separated(avx, avy, bvx, bvy):
     """(k,) separated flags via the SAT with a PER-AXIS short circuit:
     axes are tested one edge at a time over a SHRINKING working set —
@@ -310,8 +248,8 @@ def _sat_separated(avx, avy, bvx, bvy):
     the first one or two axes, so the typical cost is O(k x nQ) instead
     of the full k x nA x nB cross tensor (which the first version
     materialized before reducing — VERDICT r4 'what's wrong' #3).
-    Per-element IEEE expression identical to the expr fold
-    (_separated_by), so results are bit-equal."""
+    Per-element IEEE expression identical to the DuckDB oracle's
+    (__spark_entry__.py octagon_join_sql), so results are bit-equal."""
     import numpy as np
 
     k = len(avx)
@@ -371,37 +309,12 @@ def _sat_kernel(batches):
             [col[n].filter(mask) for n in out_names], names=out_names)
 
 
-def _separated_by(xs_p, ys_p, xs_q, ys_q):
-    """True iff some edge of CCW convex polygon P is a separating axis
-    for polygon Q: all Q vertices strictly outside (cross < 0).  Touching
-    boundaries give cross == 0 → NOT separated (closed semantics,
-    consistent with the engine's closed-interval rect predicate P1)."""
-    n_p = F.size(xs_p)
-
-    def cross(i, j):
-        xi, yi = F.element_at(xs_p, i + F.lit(1)), F.element_at(ys_p, i + F.lit(1))
-        k = F.pmod(i + F.lit(1), n_p) + F.lit(1)
-        xj, yj = F.element_at(xs_p, k), F.element_at(ys_p, k)
-        qx, qy = F.element_at(xs_q, j), F.element_at(ys_q, j)
-        return (xj - xi) * (qy - yi) - (yj - yi) * (qx - xi)
-
-    return F.exists(
-        F.sequence(F.lit(0), n_p - F.lit(1)),
-        lambda i: F.forall(
-            F.sequence(F.lit(1), F.size(xs_q)),
-            lambda j: cross(i, j) < F.lit(0.0),
-        ),
-    )
-
-
 def polygon_join(
     polys_a: DataFrame,
     polys_b: DataFrame,
     grid: Grid,
-    refine: str = "expr",
     hot_threshold: int | None = None,
-    n_salt: int = 16,
-    levels_finer: int | None = None,
+    levels_finer: int = 2,
     sample_fraction: float = 1.0,
     keep_cell: bool = False,
     validate: bool = True,
@@ -416,39 +329,25 @@ def polygon_join(
 
     Plan (same scale shape as the rect join):
       1. both sides cover-explode on their BBOX → cell equi-join
-         (salted SMJ at scale, AQE skew backstop);
+         (AQE skew backstop; adaptive cells with ``hot_threshold``);
       2. exactly-once via the bbox reference-point rule fused into the
          filter — intersecting polygons have overlapping bboxes, so
          every true pair survives in exactly one cell, no distinct;
       3. cheap bbox overlap pre-filter prunes most candidates before
-         the exact SAT refine.
+         the exact SAT refine, an Arrow-native numpy kernel
+         (``mapInArrow`` over the raw list buffers, _sat_kernel).
 
-    ``refine='expr'`` (default) evaluates the separating-axis test as
-    nested exists/forall over the vertex arrays — JVM, no Python, but
-    interpreted per candidate; ``refine='kernel'`` runs the identical
-    per-edge IEEE cross products as an Arrow-native numpy kernel
-    (mapInArrow over the raw list buffers) — the scale path when
-    bbox-overlapping candidates dominate (measured 8.6x vs the rect
-    join for 'expr' at 10^6 rows; scripts/polygon_scale_run.py tracks
-    both).
-
-    ``hot_threshold`` enables the rect join's hot-cell skew defenses
-    (census over a seeded ``sample_fraction``):
-
-    - ``levels_finer=None`` (default): explicit SALTING — A rows hash
-      into ``n_salt`` buckets, B rows fan out.  Re-partitions the same
-      candidate pairs, so output rows are identical (pytest-asserted on
-      a skewed fixture; measured at 10^6-row clustered scale in
-      BENCH/polygon_skew.json).
-    - ``levels_finer=k``: MIXED-RESOLUTION ADAPTIVE cells — hot coarse
-      cells subdivide ``k`` levels finer and candidates inside them meet
-      at the fine resolution (spatial_join.adaptive_rekey), so pairs
-      that never share a fine cell are never generated: the candidate
-      cross-product SHRINKS structurally instead of being re-sharded.
-      Exactly-once via the bbox reference-point rule evaluated at each
-      row's own resolution (spatial_join.adaptive_keep_col).  This is
-      the skew defense that actually pays for polygons, where each
-      surviving candidate costs a SAT refine (BENCH/polygon_skew.json).
+    ``hot_threshold`` enables MIXED-RESOLUTION ADAPTIVE cells, driven by
+    a hot-cell census over a seeded ``sample_fraction`` of A: hot
+    coarse cells subdivide ``levels_finer`` levels finer and candidates
+    inside them meet at the fine resolution (spatial_join.adaptive_rekey),
+    so pairs that never share a fine cell are never generated — the
+    candidate cross-product SHRINKS instead of being re-sharded.
+    Exactly-once via the bbox reference-point rule evaluated at each
+    row's own resolution (spatial_join.adaptive_keep_col).  Each
+    surviving candidate costs a SAT refine, so this beat census salting
+    on clustered input (BENCH/polygon_skew.json); with an empty census
+    the join is the plain cell join.
 
     Precondition: rings have >= 3 vertices and ``len(xs) == len(ys)``.
     With ``validate=True`` (default) the check rides the ring-payload
@@ -457,13 +356,9 @@ def polygon_join(
     (e.g. octagons_from_rects) predicate pushdown inlines the whole
     CreateArray expression into the filter, which is measurably
     expensive; pass ``validate=False`` for rings a plan constructs
-    with statically valid arity.  The Arrow kernel independently
-    asserts ring arity from the list offsets (free), so degenerate
-    rings can never produce silent wrong answers in kernel mode."""
-    if refine not in ("expr", "kernel"):
-        raise ValueError(f"refine must be 'expr' or 'kernel', got {refine!r}")
-    if levels_finer is not None and hot_threshold is None:
-        raise ValueError("levels_finer requires hot_threshold (the hot-cell census)")
+    with statically valid arity.  The SAT kernel independently asserts
+    ring arity from the list offsets (free, _check_lens), so degenerate
+    rings can never produce silent wrong answers."""
     # ring validation attaches to the verts branch below (the only
     # branch that consumes ring payloads); the slim cell join never
     # touches the arrays
@@ -479,12 +374,12 @@ def polygon_join(
             )
         # fan_out only on the plain path: with no hot-cell census the
         # cell join typically broadcasts and the whole explode→join→
-        # kernel pipeline would inherit a 1-split scan; the salted and
-        # adaptive modes shuffle on their key anyway, where an extra
-        # repartition is pure overhead.  SLIM: the cell join carries
-        # ids + bboxes only; vertex arrays are re-attached by id AFTER
-        # the bbox filter, so the join's candidate blow-up (~40x the
-        # inputs at bench scale) never copies ring payloads.
+        # kernel pipeline would inherit a 1-split scan; the adaptive
+        # mode shuffles on its key anyway, where an extra repartition
+        # is pure overhead.  SLIM: the cell join carries ids + bboxes
+        # only; vertex arrays are re-attached by id AFTER the bbox
+        # filter, so the join's candidate blow-up (~40x the inputs at
+        # bench scale) never copies ring payloads.
         if hot_threshold is None:
             df = fan_out(df)
         return with_cover_cells(
@@ -498,47 +393,35 @@ def polygon_join(
         )
 
     from rtree_cpp_spark.operators.cover import ref_point_cell_col
-    from rtree_cpp_spark.operators.spatial_join import hot_cells, salted_join
+    from rtree_cpp_spark.operators.spatial_join import (
+        adaptive_keep_col,
+        adaptive_rekey,
+        hot_cells,
+    )
 
     pa, pb = prep(polys_a, "a_"), prep(polys_b, "b_")
     rx = F.greatest(F.col("a_min_x"), F.col("b_min_x"))
     ry = F.greatest(F.col("a_min_y"), F.col("b_min_y"))
+    hot = None
     if hot_threshold is not None:
         census_src = (
             pa
             if sample_fraction >= 1.0
             else prep(polys_a.sample(fraction=sample_fraction, seed=42), "a_")
         )
-        hot = hot_cells(
-            census_src,
-            hot_threshold * sample_fraction,
-            F.lit(True).alias("_hot") if levels_finer is not None
-            else F.lit(n_salt).alias("_n_salt"),
-        )
+        hot = hot_cells(census_src, hot_threshold * sample_fraction, F.lit(True).alias("_hot"))
         # Empty-census fast path (see spatial_join_salted): with no hot
-        # cells both the salted and adaptive paths degenerate to the
-        # plain cell join — rebuild the sides through the plain prep so
-        # they also regain its fan_out/broadcast-shape treatment, and
-        # fall through to the unsalted branch.
+        # cells the adaptive path degenerates to the plain cell join —
+        # rebuild the sides through the plain prep so they also regain
+        # its fan_out/broadcast-shape treatment.
         if hot is None:
             hot_threshold = None
-            levels_finer = None
             pa, pb = prep(polys_a, "a_"), prep(polys_b, "b_")
-    if hot_threshold is not None and levels_finer is not None:
-        from rtree_cpp_spark.operators.spatial_join import (
-            adaptive_keep_col,
-            adaptive_rekey,
-        )
-
+    if hot is not None:
         joined = adaptive_rekey(pa, "a_", grid, hot, levels_finer).join(
             adaptive_rekey(pb, "b_", grid, hot, levels_finer), "key"
         )
         keep = adaptive_keep_col(grid, levels_finer, rx, ry)
-    elif hot_threshold is not None:
-        joined = salted_join(pa, pb, hot)
-        keep = F.col("cell") == ref_point_cell_col(
-            grid, F.col("a_min_x"), F.col("a_min_y"), F.col("b_min_x"), F.col("b_min_y")
-        )
     else:
         joined = pa.join(pb, "cell")
         keep = F.col("cell") == ref_point_cell_col(
@@ -557,7 +440,7 @@ def polygon_join(
     # re-attach ring payloads by id for the bbox SURVIVORS only — two
     # key joins over the (much smaller) surviving candidate set instead
     # of copying both rings through every cell-join candidate
-    cand = (
+    kin = (
         cand.select(*out_cols)
         .join(
             va.select(
@@ -573,16 +456,9 @@ def polygon_join(
             ),
             "b_doc_id",
         )
+        .select(*out_cols, "a_xs", "a_ys", "b_xs", "b_ys")
     )
-    if refine == "expr":
-        sep = _separated_by(
-            F.col("a_xs"), F.col("a_ys"), F.col("b_xs"), F.col("b_ys")
-        ) | _separated_by(F.col("b_xs"), F.col("b_ys"), F.col("a_xs"), F.col("a_ys"))
-        return cand.where(~sep).select(*out_cols)
-    kin = cand.select(*out_cols, "a_xs", "a_ys", "b_xs", "b_ys")
     schema = _id_schema(
-        kin,
-        [("a_doc_id", "a_doc_id"), ("b_doc_id", "b_doc_id")],
-        extra=", cell bigint" if keep_cell else "",
+        kin, ["a_doc_id", "b_doc_id"], extra=", cell bigint" if keep_cell else ""
     )
     return kin.mapInArrow(_sat_kernel, schema=schema)

@@ -252,7 +252,7 @@ def hot_cells(census_src: DataFrame, threshold: float, tag: Column) -> DataFrame
 
 def salted_join(a: DataFrame, b: DataFrame, hot: DataFrame) -> DataFrame:
     """Cell join re-sharded by the broadcast ``hot`` set (columns
-    ``cell, _n_salt``), shared by the rect and polygon salted joins: A
+    ``cell, _n_salt``) for :func:`spatial_join_salted`: A
     rows of a hot cell hash into one of its ``_n_salt`` buckets, B rows
     fan out over all of them; every other row keeps salt 0."""
     a = a.join(F.broadcast(hot), "cell", "left").withColumn(
@@ -382,7 +382,8 @@ def spatial_join_salted(
     split ``n_salt`` ways: A rows hash into a salt bucket, B rows fan out
     over all buckets for that cell.  Salting only *re-partitions* the
     same candidate pairs, so result rows are identical to the unsalted
-    join (asserted by tests/test_join.py on a skewed fixture) — which is
+    join (asserted by tests/test_spatial_ops.py::test_salted_join_equals_unsalted
+    on a skewed fixture) — which is
     also why ``sample_fraction < 1`` is safe: at 10^12 docs the hot-cell
     census runs on a seeded sample (threshold scaled by the fraction)
     instead of a second full cover-explode of A, and any sampling error

@@ -1,17 +1,12 @@
 #!/usr/bin/env python
-"""kNN-join execution-regime scale evidence (VERDICT r3 task: the
-sequential per-shard loop's wall cost had to be measured, or the shard
-frontier batched — this script does both).
+"""kNN-join execution-regime scale evidence.
 
 Runs the SAME kNN join (|A| = 100k query rects, |B| = 1M data rects,
-k = 5) through the three execution regimes and reports wall + result
+k = 5) through both execution regimes and reports wall + result
 checksums:
 
 - ``batched``   — knn_join: the whole A batch driver-resident (the
                   reference-style query-file contract);
-- ``sharded-N`` — knn_join_sharded at n_shards in {2, 4, 8}: bounded
-                  per-shard driver batches, shards run SEQUENTIALLY —
-                  this is the wall-vs-shards curve;
 - ``frontier``  — knn_join_frontier: the frontier stays a DataFrame,
                   every query advances through shared rounds, no
                   driver residency.
@@ -46,7 +41,6 @@ from rtree_cpp_spark.functions.cells import Grid  # noqa: E402
 from rtree_cpp_spark.operators.knn import (  # noqa: E402
     knn_join,
     knn_join_frontier,
-    knn_join_sharded,
 )
 
 GRID = Grid(6)  # 64x64 cells of 16.0 over [0,1024)^2 — the gate grid
@@ -110,9 +104,6 @@ def main() -> None:
 
     regimes: list[tuple[str, object]] = [
         ("batched", lambda: knn_join(a, b, GRID, k=5)),
-        ("sharded-2", lambda: knn_join_sharded(a, b, GRID, k=5, n_shards=2)),
-        ("sharded-4", lambda: knn_join_sharded(a, b, GRID, k=5, n_shards=4)),
-        ("sharded-8", lambda: knn_join_sharded(a, b, GRID, k=5, n_shards=8)),
         ("frontier", lambda: knn_join_frontier(a, b, GRID, k=5)),
     ]
     subset = os.environ.get("KNN_SCALE_REGIMES")

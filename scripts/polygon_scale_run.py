@@ -9,7 +9,8 @@ plan (cover explode -> cell equi-join -> bbox prefilter):
 
 - ``rect_join``     — spatial_join (closed rect-rect), the baseline;
 - ``octagon_join``  — polygon_join on corner-cut octagons derived from
-                      the same rects (SAT refine, 8x8 cross products);
+                      the same rects (Arrow-kernel SAT refine, 8x8
+                      cross products);
 - ``rect_pip``      — pip_join of N points vs the rect corpus;
 - ``polygon_pip``   — polygon_pip_join of the same points vs the
                       octagons (F.aggregate cross-product fold).
@@ -108,10 +109,8 @@ def main() -> None:
     ops = {
         "rect_join": lambda: spatial_join(a, b, GRID),
         "octagon_join": lambda: polygon_join(oa, ob, GRID),
-        "octagon_join_kernel": lambda: polygon_join(oa, ob, GRID, refine="kernel"),
         "rect_pip": lambda: pip_join(pts, a, GRID, "closed"),
         "polygon_pip": lambda: polygon_pip_join(pts, oa, GRID),
-        "polygon_pip_kernel": lambda: polygon_pip_join(pts, oa, GRID, refine="kernel"),
     }
     only = os.environ.get("POLY_SCALE_OPS")
     if only:
@@ -145,40 +144,17 @@ def main() -> None:
         spark.stop()
         return
 
-    # expr ↔ kernel identity: same counts + empty symmetric differences
-    kj_extra = (
-        polygon_join(oa, ob, GRID, refine="kernel")
-        .join(polygon_join(oa, ob, GRID), ["a_doc_id", "b_doc_id"], "left_anti")
-        .count()
-    )
-    kp_extra = (
-        polygon_pip_join(pts, oa, GRID, refine="kernel")
-        .join(polygon_pip_join(pts, oa, GRID), ["point_id", "doc_id"], "left_anti")
-        .count()
-    )
-    variant_gate_ok = (
-        kj_extra == 0 and kp_extra == 0
-        and counts["octagon_join"] == counts["octagon_join_kernel"]
-        and counts["polygon_pip"] == counts["polygon_pip_kernel"]
-    )
-    if extra_join or extra_pip or not variant_gate_ok:
+    if extra_join or extra_pip:
         print(json.dumps({"error": "gate FAILED",
-                          "extra_join": extra_join, "extra_pip": extra_pip,
-                          "kernel_extra": [kj_extra, kp_extra]}))
+                          "extra_join": extra_join, "extra_pip": extra_pip}))
         sys.exit(1)
 
     out = {
         "n_a": n_a, "n_b": n_b, "n_pts": n_pts, "cpus": cpus,
         "walls_sec": walls, "output_rows": counts,
         "sat_overhead_vs_rect_join": round(walls["octagon_join"] / walls["rect_join"], 2),
-        "sat_kernel_overhead_vs_rect_join": round(
-            walls["octagon_join_kernel"] / walls["rect_join"], 2
-        ),
         "pip_overhead_vs_rect": round(walls["polygon_pip"] / walls["rect_pip"], 2),
-        "pip_kernel_overhead_vs_rect": round(
-            walls["polygon_pip_kernel"] / walls["rect_pip"], 2
-        ),
-        "subset_gates": "ok", "variant_identity": "ok",
+        "subset_gates": "ok",
     }
     line = json.dumps(out)
     with open(Path(__file__).resolve().parent.parent / "BENCH" / "polygon_scale.json", "w") as f:

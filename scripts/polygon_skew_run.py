@@ -1,7 +1,6 @@
 #!/usr/bin/env python
-"""Skewed polygon-join scale study: salting vs mixed-resolution
-ADAPTIVE cells (round 5; VERDICT r4 'Next round' #3 + the polygon
-extension of #1).
+"""Skewed polygon-join scale study: the plain cell join vs
+mixed-resolution ADAPTIVE cells.
 
 Input: corner-cut octagons derived from clustered lattice rects
 (CLUSTER_FRAC packed into 3 hot spots of diameter CLUSTER_DIAM — the
@@ -10,15 +9,12 @@ measurements instead of guesses:
 
 1. does the hot-cell straggler actually bind at this config?
    ``plain`` is run with AQE skew-join ON and OFF;
-2. does explicit salting re-balance it?  ``salted`` under both AQE
-   settings (salting re-shards the SAME candidate pairs);
-3. does SUBDIVISION beat re-sharding?  ``adaptive`` replaces hot coarse
-   cells with cells ``levels_finer`` deeper, so the raw equi-join pair
-   count itself SHRINKS — counted and published alongside the walls
-   (``raw_candidates``: plain/salted process the identical pair set by
-   construction, adaptive's is structurally smaller; ``refine_input`` —
-   exactly-once bbox survivors — is identical for every variant, so the
-   SAT kernel work is constant and the delta isolates the join stage).
+2. does SUBDIVISION pay?  ``adaptive`` replaces hot coarse cells with
+   cells ``levels_finer`` deeper, so the raw equi-join pair count
+   itself SHRINKS — counted and published alongside the walls
+   (``raw_candidates``; the exactly-once bbox survivors are identical
+   for every variant, so the SAT kernel work is constant and the delta
+   isolates the join stage).
 
 All variants' OUTPUTS are verified identical (counts + anti-joins)
 before any wall is published.  Timing protocol per BENCH/BASELINE.md:
@@ -122,24 +118,11 @@ def main() -> None:
 
     variants = {
         # (builder, aqe_skew_on)
-        "plain_aqe": (lambda: polygon_join(oa, ob, GRID, refine="kernel"), True),
-        "plain_noaqe": (lambda: polygon_join(oa, ob, GRID, refine="kernel"), False),
-        "salted_aqe": (
-            lambda: polygon_join(
-                oa, ob, GRID, refine="kernel", hot_threshold=hot_threshold, n_salt=16
-            ),
-            True,
-        ),
-        "salted_noaqe": (
-            lambda: polygon_join(
-                oa, ob, GRID, refine="kernel", hot_threshold=hot_threshold, n_salt=16
-            ),
-            False,
-        ),
+        "plain_aqe": (lambda: polygon_join(oa, ob, GRID), True),
+        "plain_noaqe": (lambda: polygon_join(oa, ob, GRID), False),
         "adaptive_aqe": (
             lambda: polygon_join(
-                oa, ob, GRID, refine="kernel",
-                hot_threshold=hot_threshold, levels_finer=levels_finer,
+                oa, ob, GRID, hot_threshold=hot_threshold, levels_finer=levels_finer,
             ),
             True,
         ),
@@ -193,15 +176,14 @@ def main() -> None:
     out = {
         "n_a": n_a, "n_b": n_b, "cpus": cpus,
         "cluster_frac": cluster_frac, "cluster_diam": cluster_diam,
-        "hot_threshold": hot_threshold, "n_salt": 16,
+        "hot_threshold": hot_threshold,
         "levels_finer": levels_finer,
         "walls_sec": walls, "walls_all_passes": passes,
         "cpu_controls_sec": controls,
         "output_rows": counts["plain_aqe"],
         "hot_cells": n_hot,
-        "raw_candidates": {"plain_or_salted": raw_plain, "adaptive": raw_adaptive},
+        "raw_candidates": {"plain": raw_plain, "adaptive": raw_adaptive},
         "candidate_reduction_x": round(raw_plain / max(raw_adaptive, 1), 2),
-        "salting_speedup_x": round(walls["plain_noaqe"] / walls["salted_noaqe"], 2),
         "adaptive_speedup_x": round(walls["plain_aqe"] / walls["adaptive_aqe"], 2),
         "identity": "ok",
     }

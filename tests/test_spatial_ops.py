@@ -356,17 +356,6 @@ def test_rasterize_vs_brute(spark, rects_a_df, rects_a_pdf):
     assert 0 < total
 
 
-@pytest.mark.parametrize("grid", GRIDS, ids=lambda g: f"level{g.level}")
-def test_knn_kernel_equals_window(spark, rects_a_df, rects_a_pdf, grid):
-    from rtree_cpp_spark.operators.knn import knn_kernel
-
-    qpdf = synth.synth_knn_queries_pdf(8, seed=44)
-    qdf = spark.createDataFrame(qpdf)
-    got_kernel = knn_kernel(rects_a_df, qdf, grid)
-    exp = brute.knn_brute(rects_a_pdf, qpdf, dtype=np.float64)
-    assert_same_rows(got_kernel, exp)
-
-
 @pytest.mark.parametrize("boundary", ["closed", "open"])
 def test_pip_join_vs_brute(spark, rects_a_df, rects_a_pdf, boundary):
     from rtree_cpp_spark.operators.pip_join import pip_join
@@ -577,6 +566,32 @@ def _sat_intersects_np(ax, ay, bx, by) -> bool:
     return not separated(ax, ay, bx, by) and not separated(bx, by, ax, ay)
 
 
+def _sat_pairs_np(apdf, bpdf) -> pd.DataFrame:
+    """All-pairs numpy brute of the polygon SAT join."""
+    rows = []
+    for _, ra in apdf.iterrows():
+        ax, ay = np.asarray(ra["xs"]), np.asarray(ra["ys"])
+        for _, rb in bpdf.iterrows():
+            bx, by = np.asarray(rb["xs"]), np.asarray(rb["ys"])
+            if _sat_intersects_np(ax, ay, bx, by):
+                rows.append((ra["doc_id"], rb["doc_id"]))
+    return pd.DataFrame(rows, columns=["a_doc_id", "b_doc_id"])
+
+
+def _pip_pairs_np(pts, gpdf) -> pd.DataFrame:
+    """All-pairs numpy brute of convex-polygon PIP: inside or on the
+    ring iff every edge's cross product is >= 0."""
+    rows = []
+    for _, rg in gpdf.iterrows():
+        gx, gy = np.asarray(rg["xs"]), np.asarray(rg["ys"])
+        gxj, gyj = np.roll(gx, -1), np.roll(gy, -1)
+        for pid, px, py in zip(pts["point_id"], pts["x"], pts["y"]):
+            cross = (gxj - gx) * (py - gy) - (gyj - gy) * (px - gx)
+            if np.all(cross >= 0):
+                rows.append((pid, rg["doc_id"]))
+    return pd.DataFrame(rows, columns=["point_id", "doc_id"])
+
+
 def test_polygon_join_general_convex(spark):
     """SAT join on GENERAL random convex polygons (3-10 verts, rotated)
     vs the all-pairs numpy brute — proves the kernel is not
@@ -589,14 +604,7 @@ def test_polygon_join_general_convex(spark):
     got_df = polygon_join(
         spark.createDataFrame(apdf), spark.createDataFrame(bpdf), grid
     )
-    exp_rows = []
-    for _, ra in apdf.iterrows():
-        ax, ay = np.asarray(ra["xs"]), np.asarray(ra["ys"])
-        for _, rb in bpdf.iterrows():
-            bx, by = np.asarray(rb["xs"]), np.asarray(rb["ys"])
-            if _sat_intersects_np(ax, ay, bx, by):
-                exp_rows.append((ra["doc_id"], rb["doc_id"]))
-    exp = pd.DataFrame(exp_rows, columns=["a_doc_id", "b_doc_id"])
+    exp = _sat_pairs_np(apdf, bpdf)
     assert len(exp) > 0
     assert_same_rows(got_df, exp)
 
@@ -617,23 +625,14 @@ def test_polygon_pip_general_convex(spark):
     got_df = polygon_pip_join(
         spark.createDataFrame(pts), spark.createDataFrame(gpdf), grid
     )
-    exp_rows = []
-    for _, rg in gpdf.iterrows():
-        gx, gy = np.asarray(rg["xs"]), np.asarray(rg["ys"])
-        gxj, gyj = np.roll(gx, -1), np.roll(gy, -1)
-        for pid, px, py in zip(pts["point_id"], pts["x"], pts["y"]):
-            cross = (gxj - gx) * (py - gy) - (gyj - gy) * (px - gx)
-            if np.all(cross >= 0):
-                exp_rows.append((pid, rg["doc_id"]))
-    exp = pd.DataFrame(exp_rows, columns=["point_id", "doc_id"])
+    exp = _pip_pairs_np(pts, gpdf)
     assert len(exp) > 0
     assert_same_rows(got_df, exp)
 
 
 def test_polygon_kernels_empty_and_disjoint(spark):
-    """Kernel refine paths survive zero-size Arrow batches: disjoint
-    corpora (zero candidates) and an empty point set both return empty
-    results without touching the numpy stacking path."""
+    """The SAT kernel survives zero-size Arrow batches (disjoint corpora,
+    zero candidates), and PIP on an empty point set returns empty."""
     from rtree_cpp_spark.operators.pip_join import polygon_join, polygon_pip_join
 
     apdf = _random_convex_polys(10, seed=41, id_prefix="EA")
@@ -642,13 +641,13 @@ def test_polygon_kernels_empty_and_disjoint(spark):
     bpdf["xs"] = bpdf["xs"].map(lambda v: [x + 5000.0 for x in v])
     grid = Grid(5)
     a_df, b_df = spark.createDataFrame(apdf), spark.createDataFrame(bpdf)
-    assert polygon_join(a_df, b_df, grid, refine="kernel").count() == 0
+    assert polygon_join(a_df, b_df, grid).count() == 0
     empty_pts = spark.createDataFrame(
         pd.DataFrame({"point_id": pd.Series(dtype=str),
                       "x": pd.Series(dtype=float), "y": pd.Series(dtype=float)}),
         schema="point_id string, x double, y double",
     )
-    assert polygon_pip_join(empty_pts, a_df, grid, refine="kernel").count() == 0
+    assert polygon_pip_join(empty_pts, a_df, grid).count() == 0
 
 
 def test_polygon_degenerate_rings_fail_fast(spark):
@@ -671,17 +670,36 @@ def test_polygon_degenerate_rings_fail_fast(spark):
     for broken in (
         lambda: polygon_pip_join(pts, bad, grid).count(),
         lambda: polygon_join(bad, good, grid).count(),
-        lambda: polygon_join(good, bad, grid, refine="kernel").count(),
+        lambda: polygon_join(good, bad, grid).count(),
     ):
         with pytest.raises((Py4JJavaError, PythonException, Exception)) as ei:
             broken()
         assert "3 vertices" in str(ei.value)
 
 
+def test_polygon_join_unvalidated_degenerate_ring_raises(spark):
+    """validate=False skips the in-plan ring check, but the SAT kernel
+    still guards ring arity from the Arrow list offsets: a 2-vertex ring
+    whose bbox overlaps a real polygon reaches the refine and raises
+    instead of being evaluated as a degenerate edge."""
+    from rtree_cpp_spark.operators.pip_join import polygon_join
+
+    bad = spark.createDataFrame(
+        pd.DataFrame({"doc_id": ["D0"], "xs": [[100.0, 200.0]], "ys": [[100.0, 100.0]]})
+    )
+    good = spark.createDataFrame(
+        pd.DataFrame({"doc_id": ["G0"], "xs": [[120.0, 180.0, 150.0]],
+                      "ys": [[80.0, 80.0, 130.0]]})
+    )
+    with pytest.raises(Exception) as ei:
+        polygon_join(bad, good, Grid(5), validate=False).count()
+    assert "3 vertices" in str(ei.value)
+
+
 def test_polygon_kernel_accepts_nonstring_ids(spark):
-    """refine='kernel' derives its output schema from the input plan, so
-    integer doc ids work identically in both refine modes (ADVICE r4:
-    the old hardcoded string schema made the modes asymmetric)."""
+    """The SAT kernel derives its output schema from the input plan, so
+    int64 doc ids come back as int64 and match the numpy brute; PIP
+    keeps int64 point and polygon ids too (ADVICE r4)."""
     from rtree_cpp_spark.operators.pip_join import polygon_join, polygon_pip_join
 
     apdf = _random_convex_polys(30, seed=51, id_prefix="X")
@@ -690,56 +708,30 @@ def test_polygon_kernel_accepts_nonstring_ids(spark):
     bpdf["doc_id"] = np.arange(len(bpdf), dtype=np.int64)
     grid = Grid(5)
     a_df, b_df = spark.createDataFrame(apdf), spark.createDataFrame(bpdf)
-    expr = polygon_join(a_df, b_df, grid).toPandas()
-    kern = polygon_join(a_df, b_df, grid, refine="kernel").toPandas()
-    key = ["a_doc_id", "b_doc_id"]
-    pd.testing.assert_frame_equal(
-        expr.sort_values(key).reset_index(drop=True),
-        kern.sort_values(key).reset_index(drop=True),
-    )
-    assert len(expr) > 0
+    got = polygon_join(a_df, b_df, grid)
+    assert dict(got.dtypes) == {"a_doc_id": "bigint", "b_doc_id": "bigint"}
+    exp = _sat_pairs_np(apdf, bpdf)
+    assert len(exp) > 0
+    assert_same_rows(got, exp)
     rng = np.random.RandomState(57)
     pts = pd.DataFrame({
         "point_id": rng.permutation(np.arange(100, dtype=np.int64)),
         "x": rng.uniform(50, 950, size=100),
         "y": rng.uniform(50, 950, size=100),
     })
-    pts_df = spark.createDataFrame(pts)
-    pexpr = polygon_pip_join(pts_df, a_df, grid).toPandas()
-    pkern = polygon_pip_join(pts_df, a_df, grid, refine="kernel").toPandas()
-    pkey = ["point_id", "doc_id"]
-    pd.testing.assert_frame_equal(
-        pexpr.sort_values(pkey).reset_index(drop=True),
-        pkern.sort_values(pkey).reset_index(drop=True),
-    )
-
-
-def test_polygon_join_salted_equals_unsalted(spark):
-    """Hot-cell salting on the polygon join only re-partitions the same
-    candidate pairs: identical rows with an aggressive threshold that
-    salts essentially every populated cell."""
-    from rtree_cpp_spark.operators.pip_join import polygon_join
-
-    apdf = _random_convex_polys(60, seed=31, id_prefix="SA")
-    bpdf = _random_convex_polys(50, seed=37, id_prefix="SB")
-    grid = Grid(5)
-    a_df, b_df = spark.createDataFrame(apdf), spark.createDataFrame(bpdf)
-    plain = polygon_join(a_df, b_df, grid).toPandas()
-    salted = polygon_join(a_df, b_df, grid, hot_threshold=1, n_salt=4).toPandas()
-    key = ["a_doc_id", "b_doc_id"]
-    pd.testing.assert_frame_equal(
-        plain.sort_values(key).reset_index(drop=True),
-        salted.sort_values(key).reset_index(drop=True),
-    )
-    assert len(plain) > 0
+    pgot = polygon_pip_join(spark.createDataFrame(pts), a_df, grid)
+    assert dict(pgot.dtypes) == {"point_id": "bigint", "doc_id": "bigint"}
+    pexp = _pip_pairs_np(pts, apdf)
+    assert len(pexp) > 0
+    assert_same_rows(pgot, pexp)
 
 
 def test_polygon_join_adaptive_equals_plain(spark):
     """Mixed-resolution adaptive cells on the polygon join: an
     aggressive threshold subdivides essentially every populated cell,
-    yet rows are identical to the plain join in BOTH refine modes
-    (exactly-once at the row's own resolution), and keep_cell returns
-    the same coarse reference cell as the plain variant."""
+    yet rows are identical to the plain join at one and two levels
+    finer (exactly-once at the row's own resolution), and keep_cell
+    returns the same coarse reference cell as the plain variant."""
     from rtree_cpp_spark.operators.pip_join import polygon_join
 
     apdf = _random_convex_polys(60, seed=41, id_prefix="DA")
@@ -749,58 +741,14 @@ def test_polygon_join_adaptive_equals_plain(spark):
     key = ["a_doc_id", "b_doc_id"]
     plain = polygon_join(a_df, b_df, grid, keep_cell=True).toPandas()
     assert len(plain) > 0
-    for refine, lf in (("expr", 1), ("kernel", 2)):
+    for lf in (1, 2):
         adapt = polygon_join(
-            a_df, b_df, grid, refine=refine,
-            hot_threshold=1, levels_finer=lf, keep_cell=True,
+            a_df, b_df, grid, hot_threshold=1, levels_finer=lf, keep_cell=True,
         ).toPandas()
         pd.testing.assert_frame_equal(
             plain.sort_values(key).reset_index(drop=True),
             adapt.sort_values(key).reset_index(drop=True),
         )
-
-
-def test_polygon_join_adaptive_requires_threshold(spark):
-    from rtree_cpp_spark.operators.pip_join import polygon_join
-
-    apdf = _random_convex_polys(5, seed=41, id_prefix="DA")
-    a_df = spark.createDataFrame(apdf)
-    with pytest.raises(ValueError, match="hot_threshold"):
-        polygon_join(a_df, a_df, Grid(5), levels_finer=2)
-
-
-def test_polygon_refine_kernel_equals_expr(spark):
-    """The Arrow-kernel refine returns EXACTLY the expr variant's rows
-    (same IEEE cross products, different execution), on general convex
-    polygons with mixed vertex counts."""
-    from rtree_cpp_spark.operators.pip_join import polygon_join, polygon_pip_join
-
-    apdf = _random_convex_polys(50, seed=19, id_prefix="KA")
-    bpdf = _random_convex_polys(40, seed=23, id_prefix="KB")
-    grid = Grid(5)
-    a_df, b_df = spark.createDataFrame(apdf), spark.createDataFrame(bpdf)
-    expr = polygon_join(a_df, b_df, grid).toPandas()
-    kern = polygon_join(a_df, b_df, grid, refine="kernel").toPandas()
-    key = ["a_doc_id", "b_doc_id"]
-    pd.testing.assert_frame_equal(
-        expr.sort_values(key).reset_index(drop=True),
-        kern.sort_values(key).reset_index(drop=True),
-    )
-    rng = np.random.RandomState(29)
-    pts = pd.DataFrame({
-        "point_id": [f"Q{i}" for i in range(200)],
-        "x": rng.uniform(50, 950, size=200),
-        "y": rng.uniform(50, 950, size=200),
-    })
-    p_df = spark.createDataFrame(pts)
-    expr_p = polygon_pip_join(p_df, a_df, grid).toPandas()
-    kern_p = polygon_pip_join(p_df, a_df, grid, refine="kernel").toPandas()
-    key = ["point_id", "doc_id"]
-    pd.testing.assert_frame_equal(
-        expr_p.sort_values(key).reset_index(drop=True),
-        kern_p.sort_values(key).reset_index(drop=True),
-    )
-    assert len(expr) > 0 and len(expr_p) > 0
 
 
 def test_tile_pyramid_rollup(spark, rects_a_df, rects_a_pdf):
@@ -901,21 +849,6 @@ def test_hot_cells_smoothing_vs_brute(spark, rects_a_df, rects_a_pdf):
     assert [(r.smoothed, r.cell) for r in got.itertuples()] == order
     for r in got.itertuples():
         assert r.n_docs == counts[r.cell // grid.n][r.cell % grid.n]
-
-
-def test_knn_join_sharded_invariant(spark, rects_a_df, rects_b_df):
-    from rtree_cpp_spark.operators.knn import knn_join, knn_join_sharded
-
-    grid = Grid(6)
-    a = rects_a_df.limit(40)
-    base = sorted(map(tuple, knn_join(a, rects_b_df, grid, k=3).collect()))
-    for n_shards in (1, 3):
-        sharded = sorted(
-            map(tuple, knn_join_sharded(a, rects_b_df, grid, k=3, n_shards=n_shards).collect())
-        )
-        assert sharded == base
-    with pytest.raises(ValueError):
-        knn_join_sharded(a, rects_b_df, grid, k=3, n_shards=0)
 
 
 def test_knn_join_frontier_matches_batched(spark, rects_a_df, rects_b_df):
