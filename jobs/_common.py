@@ -92,10 +92,12 @@ def load_query_points(spark: SparkSession, ref: str) -> DataFrame:
 
 
 def coarse_cell_col(grid: Grid, coarse_level: int, cell: Column) -> Column:
-    """Parent of ``cell`` at ``coarse_level`` — the lineage partition key."""
+    """Parent of ``cell`` at ``coarse_level`` — the lineage partition key.
+    Integer shifts throughout: a double division rounds cell ids above
+    2^53 into the wrong parent."""
     up = grid.level - coarse_level
-    cx = F.floor(cell / F.lit(grid.n)).cast("long")
-    cy = (cell % F.lit(grid.n)).cast("long")
+    cx = F.shiftright(cell, grid.level)
+    cy = cell.bitwiseAND(grid.n - 1)
     return (
         F.shiftrightunsigned(cx, up) * F.lit(1 << coarse_level)
         + F.shiftrightunsigned(cy, up)

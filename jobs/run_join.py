@@ -6,12 +6,19 @@
         --output /data/out/pairs --manifest /data/out/manifest \
         [--hot-threshold 100000] [--n-salt 16] [--geometry rect|octagon]
 
+For the rect join, ``--hot-threshold``/``--n-salt`` only apply when
+neither side fits Spark's broadcast threshold
+(``spark.sql.autoBroadcastJoinThreshold``, judged on Catalyst's size
+estimate of each cover-exploded side): a side that fits is broadcast in
+a plain cell join, with no census and no salt.
+
 Output: (a_doc_id, b_doc_id) partitioned by the reference-point coarse
 cell (`part`) with per-partition lineage rows in the manifest; re-running
 with the same --run-id skips completed partitions.
 
 ``--geometry octagon`` runs the convex-polygon SAT join on corner-cut
-octagons derived from the doc rects: the same hot-cell census, but hot
+octagons derived from the doc rects: a hot-cell census that always
+runs (fine cells shrink candidates even under a broadcast), and hot
 cells subdivide into adaptive finer cells instead of salting
 (``--n-salt`` applies to the rect join only), with the same
 reference-cell output partitioning.

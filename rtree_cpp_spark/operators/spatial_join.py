@@ -7,7 +7,10 @@ predicate → reference-point dedup.  Hot cells ("dense urban tiles",
 north_star) additionally get **explicit salting**: the build side hashes
 doc_id into ``n_salt`` buckets, the probe side fans out over all buckets
 — only for cells whose candidate count exceeds a threshold, discovered
-by a cheap pre-aggregation.
+by a cheap pre-aggregation.  Salting (and its census) only runs when
+the cell join is a shuffle join: when either side fits Spark's
+``spark.sql.autoBroadcastJoinThreshold``, the plain cell join is
+broadcast and there is no shuffle partition to split.
 
 Exactly-once pairs: a pair intersecting in several shared cells is kept
 only in the cell of its reference point — no ``distinct`` shuffle
@@ -367,6 +370,16 @@ def _adaptive_candidates(
     )
 
 
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Whether ``df`` is small enough for Spark to broadcast it in a
+    join: Catalyst's static size estimate against the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (the ``JoinSelection``
+    rule; -1 disables it).  Plans the frame but runs no job."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 <= size <= conf.autoBroadcastJoinThreshold()
+
+
 def spatial_join_salted(
     a_rects: DataFrame,
     b_rects: DataFrame,
@@ -388,9 +401,22 @@ def spatial_join_salted(
     census runs on a seeded sample (threshold scaled by the fraction)
     instead of a second full cover-explode of A, and any sampling error
     only shifts which cells get salted, never which pairs come out.
+
+    Census and salt only run when neither cover-exploded side fits
+    Spark's ``spark.sql.autoBroadcastJoinThreshold`` (Catalyst's static
+    size estimate, no job): otherwise the plain cell join is returned,
+    which Spark broadcasts, so ``hot_threshold``, ``n_salt`` and
+    ``sample_fraction`` have no effect (asserted by
+    tests/test_spatial_ops.py::test_salted_join_broadcast_skips_census).
+    A threshold of -1 always takes the census path.
     """
     a = _a_side(a_rects, grid)
     b = _b_side(b_rects, grid)
+    # A broadcast join has no shuffle partition for salting to split: the
+    # census would be a wasted Spark action, and the salt's left joins
+    # inflate the size estimate into a sort-merge join.
+    if _fits_broadcast(a) or _fits_broadcast(b):
+        return _refine(a.join(b, "cell"), grid, keep_cell)
     census_src = (
         a
         if sample_fraction >= 1.0

@@ -107,7 +107,9 @@ def resumable_write(
     output: each key is written by one task, so a batch writes one file
     per key plus one manifest file (AQE may still split an oversized key).
     A missing manifest path means a fresh run, answered without a Spark
-    job; any other manifest read error aborts the write.
+    job; any other manifest read error aborts the write.  A manifest
+    row's ``wall_ms`` is the wall time of the batch that wrote its key:
+    every key of one batch carries the same value.
 
     The upstream plan executes exactly ONCE: ``df`` is persisted and
     materialized by a single per-key count aggregation (which also yields

@@ -103,3 +103,23 @@ def test_sql_twin_matches_numpy(spark):
         .to_numpy()
     )
     np.testing.assert_array_equal(got_duck, expected)
+
+
+def test_coarse_cell_col_exact_above_2_53(spark):
+    # Grid(30) cell ids reach 2^60; a double division rounds cx = 2^28-1
+    # up to 2^28 and lands the cell in the wrong coarse parent
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from jobs._common import coarse_cell_col
+
+    g, coarse = Grid(30), 3
+    cx = np.array([(1 << 28) - 1, 0, g.n - 1, 5], dtype=np.int64)
+    cy = np.array([g.n - 1, 0, g.n - 1, (1 << 27) + 3], dtype=np.int64)
+    cells = g.encode(cx, cy)
+    up = g.level - coarse
+    expected = ((cx >> up) << coarse) | (cy >> up)
+    assert expected[0] == 15
+    df = spark.createDataFrame(pd.DataFrame({"cell": cells}))
+    got = df.select(coarse_cell_col(g, coarse, F.col("cell"))).toPandas()["part"].to_numpy()
+    np.testing.assert_array_equal(got, expected)

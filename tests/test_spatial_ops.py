@@ -1,5 +1,7 @@
 """End-to-end golden tests: engine vs brute-force oracle (SURVEY.md §5)."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -69,14 +71,47 @@ def test_spatial_join_vs_brute(spark, rects_a_df, rects_b_df, rects_a_pdf, rects
 
 def test_salted_join_equals_unsalted(spark, rects_a_df, rects_b_df, rects_a_pdf, rects_b_pdf):
     # skewed fixture: 30% of docs are clustered in 3 hot spots, so a low
-    # threshold actually triggers salting here
+    # threshold actually triggers salting here; broadcast joins are off,
+    # or the join would skip the census and salt
     grid = Grid(6)
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
-    salted = spatial_join_salted(rects_a_df, rects_b_df, grid, hot_threshold=5, n_salt=4)
-    exp = brute.join_brute(rects_a_pdf, rects_b_pdf)
-    assert_same_rows(salted, exp)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        salted = spatial_join_salted(rects_a_df, rects_b_df, grid, hot_threshold=5, n_salt=4)
+        exp = brute.join_brute(rects_a_pdf, rects_b_pdf)
+        assert_same_rows(salted, exp)
+        plan = salted._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan, plan[:3000]
+        assert re.search(r"Exchange hashpartitioning\(cell#\d+L, salt#\d+", plan), plan[:3000]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     # the hot-cell census is collected, not cached: nothing is left behind
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_salted_join_broadcast_skips_census(spark, rects_a_pdf, rects_b_pdf, tmp_path):
+    # the same skewed fixture read from parquet, as the join job reads
+    # it: both cover-exploded sides fit the default broadcast threshold,
+    # so the call plans a broadcast cell join without running the census
+    grid = Grid(6)
+    spark.createDataFrame(rects_a_pdf).write.parquet(str(tmp_path / "a"))
+    spark.createDataFrame(rects_b_pdf).write.parquet(str(tmp_path / "b"))
+    a = spark.read.parquet(str(tmp_path / "a"))
+    b = spark.read.parquet(str(tmp_path / "b"))
+    sc = spark.sparkContext
+    sc.setJobGroup("salted_broadcast", "spatial_join_salted call")
+    try:
+        got = spatial_join_salted(a, b, grid, hot_threshold=5, n_salt=4)
+        assert list(sc.statusTracker().getJobIdsForGroup("salted_broadcast")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert_same_rows(got, brute.join_brute(rects_a_pdf, rects_b_pdf))
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan[:3000]
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan[:3000]
+    assert "salt#" not in plan, plan[:3000]
 
 
 @pytest.mark.parametrize("grid", GRIDS, ids=lambda g: f"level{g.level}")
